@@ -46,20 +46,7 @@ import scala.jdk.CollectionConverters._
   */
 object Bench {
 
-  private[graft] def mkSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private[graft] def mkSession(cpus: String): SparkSession = GraftSession(cpus)
 
   // warmup: touch every table + exercise shuffle/codegen paths once
   private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {

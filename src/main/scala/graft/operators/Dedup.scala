@@ -333,20 +333,22 @@ object Dedup {
     // rounds — component = min member id either way, so the output is
     // identical; the win is ~15-20 scheduler round-trips for the small
     // root/pair graphs CcIndex and the dedup entries contract to. The
-    // probe + collect read the ALREADY-materialized edge checkpoint
-    // (never re-run the pair pipeline), and anything over the cap
-    // (GRAFT_CC_LOCAL_EDGES, default 1M symmetrized rows ≈ 16 MB —
-    // driver-bounded by construction) takes the distributed loop, so
-    // the at-scale path is chosen by measured size, not a constant.
+    // probe IS the collect: one single-task `take` of at most 2·cap+1 rows
+    // over the ALREADY-materialized edge checkpoint (never re-runs the
+    // pair pipeline; one job, where a LIMIT-count probe would add a
+    // second and compile a fresh LIMIT class on every call). Anything
+    // over the cap (GRAFT_CC_LOCAL_EDGES, default 1M symmetrized rows ≈
+    // 16 MB — driver-bounded by construction) takes the distributed loop,
+    // so the at-scale path is chosen by measured size, not a constant.
     val localCap = sys.props.get("graft.cc.local.edges")
       .orElse(sys.env.get("GRAFT_CC_LOCAL_EDGES")).map(_.toLong)
       .getOrElse(1000000L)
     val longIds = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && localCap > 0 &&
-        edges.limit((2 * localCap + 1).toInt).count() <= 2 * localCap) {
-      val rows = edges.collect()
-      if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
+    if (longIds && localCap > 0) {
+      val rows = edges.coalesce(1).take((2 * localCap + 1).toInt)
+      if (rows.length <= 2 * localCap &&
+          rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
         val parent = new java.util.HashMap[Long, Long]()
         def find(x: Long): Long = {
           var r = x

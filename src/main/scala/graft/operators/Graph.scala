@@ -47,7 +47,7 @@ object Graph {
     // per-hop recopy of the accumulated set
     def seen: DataFrame = levels.reduce(_ union _)
     var hop = 0
-    while (hop < maxHops && frontier.limit(1).count() > 0) {
+    while (hop < maxHops && !frontier.isEmpty) {
       hop += 1
       val next = e.join(frontier.withColumnRenamed("node", "src").drop("dist"), Seq("src"))
         .select(col("dst").as("node")).distinct()
@@ -431,7 +431,7 @@ object Graph {
     var seen = frontier
     val terms = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var depth = 0
-    while (frontier.limit(1).count() > 0 && depth < maxDepth) {
+    while (!frontier.isEmpty && depth < maxDepth) {
       depth += 1
       val next = e
         .join(frontier.select(col("s"), col("v").as("src")), Seq("src"))
@@ -446,7 +446,7 @@ object Graph {
     // the ≤maxDepth neighborhood — a deliberate, documented semantic,
     // and the oracle-expressible one); truncate=false means maxDepth is
     // a budget and running out of it is an error, never silent.
-    require(truncate || frontier.limit(1).count() == 0,
+    require(truncate || frontier.isEmpty,
       s"harmonic: BFS still expanding at depth $maxDepth — raise maxDepth")
     if (terms.isEmpty)
       e.sparkSession.range(0).select(col("id").as("node"), col("id").as("harm_e9"))
@@ -656,7 +656,7 @@ object Graph {
     if (localScc.isDefined) return localScc.get
     val done = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var outer = 0
-    while (nodes.limit(1).count() > 0) {
+    while (!nodes.isEmpty) {
       outer += 1
       require(outer <= maxOuter,
         s"scc: not converged after $maxOuter outer rounds — adversarial " +
@@ -668,7 +668,7 @@ object Graph {
         .select(col("node"), col("node").as("scc_id")).transform(graft.plans.Lineage.truncate)
       done += isolated
       nodes = touched
-      if (nodes.limit(1).count() > 0) {
+      if (!nodes.isEmpty) {
         // 2. min-ancestor coloring to fixpoint (frontier propagation);
         // `joined` is the one checkpoint per hop — `lab`/`improved` are
         // single-projection derivations of it, so lineage stays depth-1
@@ -676,7 +676,7 @@ object Graph {
         var lab = nodes.select(col("node"), col("node").as("lab")).transform(graft.plans.Lineage.truncate)
         var improved = lab
         var inner = 0
-        while (improved.limit(1).count() > 0) {
+        while (!improved.isEmpty) {
           inner += unrollHops
           require(inner <= maxInner,
             s"scc: coloring not converged after $maxInner hops — graph diameter " +
@@ -714,7 +714,7 @@ object Graph {
           lab.filter(col("node") === col("lab")).transform(graft.plans.Lineage.truncate))
         def mark: DataFrame = markLevels.reduce(_ union _)
         var frontier = markLevels.head
-        while (frontier.limit(1).count() > 0) {
+        while (!frontier.isEmpty) {
           val next = labEdges
             .join(frontier.select(col("node").as("dst"), col("lab")), Seq("dst", "lab"))
             .select(col("src").as("node"), col("lab")).distinct()
@@ -785,7 +785,7 @@ object Graph {
     layers += frontier
     def seen: DataFrame = layers.reduce(_ union _).select(col("s"), col("v"))
     var depth = 0
-    while (frontier.limit(1).count() > 0 && depth < maxDepth) {
+    while (!frontier.isEmpty && depth < maxDepth) {
       depth += 1
       val next = e
         .join(frontier.select(col("s"), col("v").as("src"), col("sigma")), Seq("src"))
@@ -801,7 +801,7 @@ object Graph {
       layers += next
       frontier = next
     }
-    require(frontier.limit(1).count() == 0,
+    require(frontier.isEmpty,
       s"betweenness: BFS still expanding at depth $maxDepth — raise maxDepth")
     // backward accumulation, deepest layer first (its δ is 0)
     val Scale = 1000000000L
@@ -1656,7 +1656,7 @@ object Graph {
       val levels = scala.collection.mutable.ArrayBuffer(frontier)
       def seen: DataFrame = levels.reduce(_ union _)
       var hop = 0
-      while (hop < 8 && frontier.limit(1).count() > 0) {
+      while (hop < 8 && !frontier.isEmpty) {
         hop += 1
         frontier = e
           .join(frontier.withColumnRenamed("node", "src").drop("dist"), Seq("src"))

@@ -147,8 +147,8 @@ object IncrementalCorpus {
     // pairs, and the appends are partition OVERWRITES. Inputs are all
     // derived from checkpointed frames, so the concurrent actions never
     // recompute a shared uncheckpointed lineage.
-    val hasPairs = prof("ingest.pairs_nonempty")(pairs.limit(1).count() > 0)
-    prof("ingest.parallel_writes")(PrefixIndex.inParallel(
+    val hasPairs = prof("ingest.pairs_nonempty")(!pairs.isEmpty)
+    prof("ingest.parallel_writes")(PrefixIndex.inParallel(spark)(
       () => if (hasPairs)
         CcIndex.update(spark, ccDir(stateDir), pairs, batchId, numBuckets),
       () => sizes.join(fresh.select("doc_id", "h"), Seq("doc_id"))

@@ -171,22 +171,40 @@ object PrefixIndex {
     * marker (`sizes/`) is still written strictly AFTER every task here
     * completes, and the replay discipline never depended on an order
     * among the pre-marker dirs (a crash anywhere before the marker
-    * leaves the whole batch invisible). Failures propagate unwrapped. */
-  private[operators] def inParallel(tasks: (() => Unit)*): Unit = {
+    * leaves the whole batch invisible). The first failure cancels the
+    * siblings' Spark jobs (every task's jobs carry one job tag, and the
+    * cancel repeats until each sibling has returned, so a sibling
+    * between actions cannot start a fresh one), and it propagates
+    * unwrapped only once no sibling is still writing behind the caller. */
+  private[graft] def inParallel(spark: SparkSession)(tasks: (() => Unit)*): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"graft-in-parallel-${java.util.UUID.randomUUID}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+    val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
     try {
-      val futs = tasks.map { t =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = t()
-        })
-      }
-      futs.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
+      tasks.foreach { t =>
+        done.submit { () =>
+          sc.addJobTag(tag)
+          try t() finally sc.removeJobTag(tag)
         }
       }
+      var failure: Throwable = null
+      var pending = tasks.size
+      while (pending > 0) {
+        if (failure != null) sc.cancelJobsWithTag(tag, "a sibling write failed")
+        val f = if (failure == null) done.take()
+          else done.poll(50, java.util.concurrent.TimeUnit.MILLISECONDS)
+        if (f != null) {
+          pending -= 1
+          try f.get()
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              if (failure == null) failure = e.getCause
+              else failure.addSuppressed(e.getCause)
+          }
+        }
+      }
+      if (failure != null) throw failure
     } finally pool.shutdown()
   }
 
@@ -888,7 +906,7 @@ object PrefixIndex {
       writeBucketsMarker(spark, dir, 0L, b) // the layout's modulus, first
       // df must land before prefixOf (it re-reads df from disk for real
       // scan stats); postings is independent — overlap them (§2.6)
-      prof("build.write_df_postings")(inParallel(
+      prof("build.write_df_postings")(inParallel(spark)(
         () => writeData(
           e.groupBy("tok").agg(count(lit(1)).as("df")),
           s"$dir/df", "df", "overwrite", b),
@@ -898,7 +916,7 @@ object PrefixIndex {
         writeData(pref, s"$dir/prefix", "prefix", "overwrite", b))
       // valve-estimate aux state (estimate metadata only — see scaladoc);
       // pdf re-reads prefix from disk, stats is independent — overlap
-      prof("build.write_pdf_stats")(inParallel(
+      prof("build.write_pdf_stats")(inParallel(spark)(
         () => writeData(
           readData(spark, s"$dir/prefix", "tb", None).groupBy("tok")
             .agg(count(lit(1)).cast("long").as("c")),
@@ -958,7 +976,7 @@ object PrefixIndex {
       // BEFORE the marker: a crash in between only inflates a future
       // estimate — the safe direction, never a lost committed delta) —
       // overlap them (§2.6); the marker write stays strictly last
-      prof("append.write_premarker")(inParallel(
+      prof("append.write_premarker")(inParallel(spark)(
         () => writeData(
           prefNew, dataPath(dir, "prefix", ep), "prefix", "append", b),
         () => writeData(
